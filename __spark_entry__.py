@@ -4350,7 +4350,7 @@ def oracle_sql() -> dict[str, str]:
         "x4_gopher_gates": """
             WITH w AS (
               SELECT doc_id, coalesce(text, '') AS c,
-                     list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
+                     list_filter(regexp_split_to_array(coalesce(text, ''), '\\s+'),
                                  x -> x <> '') AS words
               FROM documents
             ), s AS (
@@ -4358,7 +4358,7 @@ def oracle_sql() -> dict[str, str]:
                      CASE WHEN len(words) > 0
                           THEN list_aggregate(list_transform(words, x -> length(x)), 'sum') / len(words)
                           ELSE 0.0 END AS mean_len,
-                     len(regexp_extract_all(c, '#|\.\.\.|…')) AS n_symbols,
+                     len(regexp_extract_all(c, '#|\\.\\.\\.|…')) AS n_symbols,
                      CASE WHEN len(words) > 0
                           THEN len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]'))) / len(words)
                           ELSE 0.0 END AS alpha_frac,
@@ -4447,7 +4447,7 @@ def oracle_sql() -> dict[str, str]:
         "x4_census": """
             WITH n AS (
               SELECT source, coalesce(text, '') AS c,
-                     trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS t
+                     trim(regexp_replace(lower(coalesce(text, '')), '\\s+', ' ', 'g')) AS t
               FROM documents
             )
             SELECT source, count(*) AS n_docs,
@@ -4460,7 +4460,7 @@ def oracle_sql() -> dict[str, str]:
         "x4_lm_quality": """
             WITH n AS (
               SELECT doc_id,
-                     trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS t
+                     trim(regexp_replace(lower(coalesce(text, '')), '\\s+', ' ', 'g')) AS t
               FROM documents
             ), tok AS (
               SELECT doc_id, unnest(string_split(t, ' ')) AS token

@@ -1676,27 +1676,20 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.8,
-    arrow_cosine: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, exact (X1 vector flavor).
 
     Brute force over broadcast probes — the oracle-checkable baseline; for
     all-pairs dedup at corpus scale use similarity.lsh_bucket to generate
     candidates (equi-join on bucket keys) and apply the same cosine filter.
-    ``arrow_cosine=True`` swaps the interpreted expression cosine for the
-    Arrow numpy kernel (same trade as ``brute_force_topk``: faster at large
-    probe batches, float-order-different, not oracle-parity).
+    The cosine is the interpreted expression form, so the pair set is
+    oracle-parity (``brute_force_topk`` carries the Arrow-kernel variant).
     """
     from datamunging_spark.functions import cosine_similarity
 
     p = probes.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     c = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    if arrow_cosine:
-        from datamunging_spark.operators.similarity import _cosine_udf
-
-        cos = _cosine_udf()(F.col("_va"), F.col("_vb"))
-    else:
-        cos = cosine_similarity(F.col("_va"), F.col("_vb"))
+    cos = cosine_similarity(F.col("_va"), F.col("_vb"))
     return (
         F.broadcast(p)
         .crossJoin(c)
@@ -1754,7 +1747,6 @@ def paragraph_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     sep: str = "\n",
-    materialize: bool = True,
 ) -> DataFrame:
     """Paragraph-granular exact dedup (the C4/RefinedWeb line-dedup step):
     split every doc on ``sep`` (a LITERAL separator, escaped before the
@@ -1775,24 +1767,23 @@ def paragraph_dedup(
     (array_sort of (pos, para) structs — a bounded per-doc array touched
     once), one join back onto ``df``. Nothing quadratic, no skew. The
     paragraph table feeds three plan branches (hash groupBy, join probe,
-    blank pass-through), so by default it is ``localCheckpoint``-ed —
-    ONE materialization instead of three corpus scans; pass
-    ``materialize=False`` to keep the pure-lineage plan (and on a real
-    cluster prefer ``checkpoint()`` via a checkpoint dir for
-    executor-loss recovery). Docs whose every content paragraph was seen
-    earlier come back with only their structural separators (callers drop
-    or re-filter by token count).
+    blank pass-through), so it is ``localCheckpoint``-ed — ONE
+    materialization instead of three corpus scans. Docs whose every
+    content paragraph was seen earlier come back with only their
+    structural separators (callers drop or re-filter by token count).
     """
     from datamunging_spark.functions import tokenize
 
-    paras = df.select(
-        F.col(id_col),
-        F.posexplode(
-            tokenize(F.coalesce(F.col(text_col), F.lit("")), sep)
-        ).alias("_pos", "_para"),
-    ).withColumn("_ph", F.md5(normalize_text(F.col("_para"))))
-    if materialize:
-        paras = paras.localCheckpoint()
+    paras = (
+        df.select(
+            F.col(id_col),
+            F.posexplode(
+                tokenize(F.coalesce(F.col(text_col), F.lit("")), sep)
+            ).alias("_pos", "_para"),
+        )
+        .withColumn("_ph", F.md5(normalize_text(F.col("_para"))))
+        .localCheckpoint()
+    )
     blank = F.md5(F.lit(""))  # normalize_text('') == ''
     content = paras.filter(F.col("_ph") != blank)
     first = content.groupBy("_ph").agg(
@@ -1841,7 +1832,6 @@ def semantic_neardup_pairs(
     n_clusters: int = 16,
     seed: int = 42,
     index=None,
-    arrow_cosine: bool = True,
 ) -> DataFrame:
     """Semantic near-duplicate candidate pairs, SemDeDup-style (Abbas et
     al. 2023, "SemDeDup: Data-efficient learning at web-scale through
@@ -1855,7 +1845,7 @@ def semantic_neardup_pairs(
     the IVF index IS the SemDeDup clustering), then a self-equi-join on
     the cell id with ``id_a < id_b`` ordering — never a cross join; each
     cluster's pair block is an ordinary hash-join partition that AQE can
-    split. The expression-form cosine keeps the filter deterministic.
+    split.
 
     Scale contract: within-cluster cost is quadratic in cluster size, so
     ``n_clusters`` must grow with the corpus (SemDeDup's published runs
@@ -1863,13 +1853,10 @@ def semantic_neardup_pairs(
     here). Pass a prebuilt ``index`` (:class:`similarity.IvfIndex`) to
     amortize the fit across calls or reuse an ANN index's clustering.
 
-    ``arrow_cosine=True`` (default) scores pairs with the Arrow numpy
-    cosine kernel — pair volume is quadratic-within-cell by design, so
-    the interpreted zip_with/aggregate fold is the wrong tool (measured
-    ~4× slower end-to-end at 5k vectors / 1.6M pairs). ``False`` keeps
-    the pure-expression form (per-row norms still precomputed BELOW the
-    join, so each pair pays one fold, not three) for engine-portability
-    experiments.
+    Pairs are scored with the Arrow numpy cosine kernel — pair volume is
+    quadratic-within-cell by design, so the interpreted zip_with/aggregate
+    fold is the wrong tool (measured ~4× slower end-to-end at 5k vectors
+    / 1.6M pairs).
     """
     from datamunging_spark.operators.similarity import ivf_build
 
@@ -1895,37 +1882,16 @@ def semantic_neardup_pairs(
     # the assignment feeds both sides of the self-join; materialize once
     # (repo convention for multi-branch consumers) so the KMeans transform
     # does not execute twice
-    from datamunging_spark.functions import l2_norm
+    from datamunging_spark.operators.similarity import _cosine_udf
 
-    if not arrow_cosine:
-        # norms once per ROW (n folds), not once per PAIR (would be 2n²)
-        assigned = assigned.withColumn("_nrm", l2_norm(F.col("_cv")))
     assigned = assigned.localCheckpoint()
-    a_cols = [
-        F.col("neighbor_id").alias("id_a"),
-        F.col("_cv").alias("_va"),
-        F.col("_cell"),
-    ]
-    b_cols = [
-        F.col("neighbor_id").alias("id_b"),
-        F.col("_cv").alias("_vb"),
-        F.col("_cell"),
-    ]
-    if not arrow_cosine:
-        a_cols.append(F.col("_nrm").alias("_na"))
-        b_cols.append(F.col("_nrm").alias("_nb"))
-    a = assigned.select(*a_cols)
-    b = assigned.select(*b_cols)
-    if arrow_cosine:
-        from datamunging_spark.operators.similarity import _cosine_udf
-
-        cos = _cosine_udf()(F.col("_va"), F.col("_vb"))
-    else:
-        from datamunging_spark.functions import dot_product
-
-        cos = dot_product(F.col("_va"), F.col("_vb")) / (
-            F.col("_na") * F.col("_nb")
-        )
+    a = assigned.select(
+        F.col("neighbor_id").alias("id_a"), F.col("_cv").alias("_va"), "_cell"
+    )
+    b = assigned.select(
+        F.col("neighbor_id").alias("id_b"), F.col("_cv").alias("_vb"), "_cell"
+    )
+    cos = _cosine_udf()(F.col("_va"), F.col("_vb"))
     return (
         a.join(b, "_cell")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1942,7 +1908,6 @@ def semantic_dedup(
     n_clusters: int = 16,
     seed: int = 42,
     index=None,
-    arrow_cosine: bool = True,
 ) -> DataFrame:
     """SemDeDup end-to-end: drop every document whose embedding is a
     semantic near-duplicate (cosine ≥ ``threshold`` within its KMeans
@@ -1964,7 +1929,6 @@ def semantic_dedup(
         n_clusters=n_clusters,
         seed=seed,
         index=index,
-        arrow_cosine=arrow_cosine,
     )
     labels = connected_component_labels(pairs, a_col="id_a", b_col="id_b")
     losers = labels.filter(F.col("v") != F.col("component")).select(
@@ -2151,7 +2115,6 @@ def incremental_semantic_dedup(
     threshold: float = 0.95,
     within_batch: bool = True,
     max_drift: float | None = 2.0,
-    arrow_cosine: bool = True,
     _return_assigned: bool = False,
 ):
     """SemDeDup a NEW ingest batch against history — completing the
@@ -2212,14 +2175,9 @@ def incremental_semantic_dedup(
         F.col("_cv").alias("_hv"),
         "_cell",
     )
-    if arrow_cosine:
-        from datamunging_spark.operators.similarity import _cosine_udf
+    from datamunging_spark.operators.similarity import _cosine_udf
 
-        cos = _cosine_udf()(F.col("_bv"), F.col("_hv"))
-    else:
-        from datamunging_spark.functions import cosine_similarity
-
-        cos = cosine_similarity(F.col("_bv"), F.col("_hv"))
+    cos = _cosine_udf()(F.col("_bv"), F.col("_hv"))
     losers = (
         bs.join(hs, "_cell")
         .select("_nid", cos.alias("_cos"))
@@ -2245,7 +2203,6 @@ def incremental_semantic_dedup(
                 snapshot.centers,
                 snapshot.centers.shape[0],
             ),
-            arrow_cosine=arrow_cosine,
         )
     if not _return_assigned:
         return fresh

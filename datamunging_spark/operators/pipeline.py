@@ -44,7 +44,6 @@ def curate_corpus(
     c4_min_sentences: int = 3,
     line_dedup: bool = False,
     url_col: str | None = None,
-    materialize: bool | None = None,
 ) -> DataFrame:
     """Filter + dedup a document corpus for training use.
 
@@ -78,15 +77,12 @@ def curate_corpus(
     remnants that the token/non-empty refilter drops (exact dedup then
     handles whatever identical remnants remain).
 
-    ``materialize`` (default auto = on iff ``fuzzy``): ``localCheckpoint``
-    the filtered+exact-deduped corpus before the fuzzy stage. The MinHash
-    stage consumes that lineage TWICE — once to build signatures, once as
-    the probe side of the final loser anti-join — so without
-    materialization the quality filters and the dedup shuffle re-execute
-    per branch (two extra full corpus passes at the 100 TB design point).
-    On a real cluster prefer ``checkpoint()`` with a checkpoint dir (or
-    persist to storage) for executor-loss recovery — same trade as
-    ``paragraph_dedup``'s materialize flag.
+    With ``fuzzy`` on, the filtered+exact-deduped corpus is
+    ``localCheckpoint``-ed before the fuzzy stage. The MinHash stage
+    consumes that lineage TWICE — once to build signatures, once as the
+    probe side of the final loser anti-join — so without materialization
+    the quality filters and the dedup shuffle re-execute per branch (two
+    extra full corpus passes at the 100 TB design point).
     """
     c = F.col(text_col)
     kept = df
@@ -199,8 +195,7 @@ def curate_corpus(
     # Exact dedup: min-id survivor per content hash (one uniform shuffle).
     kept = exact_dedup(kept, text_col, id_col)
     if fuzzy:
-        if materialize or materialize is None:
-            kept = kept.localCheckpoint()
+        kept = kept.localCheckpoint()
         kept = minhash_dedup(
             kept, text_col, id_col, threshold=fuzzy_threshold
         )

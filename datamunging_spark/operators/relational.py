@@ -79,7 +79,6 @@ def percentile_bucketize(
     labels: tuple[str, ...] = DEFAULT_BUCKET_LABELS,
     else_label: str = DEFAULT_BUCKET_ELSE,
     bucket_out: str = "bucket",
-    broadcast_agg: bool = False,
 ) -> DataFrame:
     """Flagship feature-generation query (R16, README.md:237-261).
 
@@ -87,15 +86,12 @@ def percentile_bucketize(
     bucket assignment. Scale shape: the aggregated side has ONE row per
     distinct key, so when key cardinality is modest AQE's runtime stats pick
     a broadcast join and the fact table is never shuffled (verified via
-    explain at test SFs). The hint is deliberately NOT forced by default:
-    at 100 TB a high-cardinality key would make a forced broadcast OOM the
-    driver — set ``broadcast_agg=True`` only when the key space is known
-    small. Fact scan prunes to ``keep_cols + [key, value_col]``.
+    explain at test SFs). The hint is deliberately NOT forced: at 100 TB a
+    high-cardinality key would make a forced broadcast OOM the driver, so
+    AQE decides. Fact scan prunes to ``keep_cols + [key, value_col]``.
     """
     value = F.col(value_col).cast("double")
     pct = grouped_percentiles(df, key, value, percentiles)
-    if broadcast_agg:
-        pct = F.broadcast(pct)
     joined = df.join(pct, on=key, how="inner")
     arms = [
         (F.col("percentiles").getItem(i), labels[i]) for i in range(len(labels))

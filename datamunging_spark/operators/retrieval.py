@@ -111,8 +111,8 @@ def _bm25_parts(k1: float, b: float) -> tuple[Column, Column]:
     return idf, tfn
 
 
-def search_terms(col: Column | str, lowercase: bool = True) -> Column:
-    """``array<string>`` of query/document terms: (lowercase,) split on
+def search_terms(col: Column | str) -> Column:
+    """``array<string>`` of query/document terms: lowercase, split on
     single spaces, empty tokens dropped — the exact tokenization the
     r33 TF-IDF oracle pins, so every downstream count is
     DuckDB-reproducible. The split itself is the canonical
@@ -121,9 +121,9 @@ def search_terms(col: Column | str, lowercase: bool = True) -> Column:
     filter."""
     from datamunging_spark.functions import tokenize
 
-    c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    if lowercase:
-        c = F.lower(c)
+    c = F.lower(
+        F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
+    )
     return F.filter(tokenize(c), lambda w: w != "")
 
 
@@ -131,7 +131,6 @@ def inverted_index(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     positions: bool = False,
     group_col: str | None = None,
 ) -> DataFrame:
@@ -169,7 +168,7 @@ def inverted_index(
     toks = df.select(
         *gb,
         F.col(id_col),
-        search_terms(text_col, lowercase).alias("_toks"),
+        search_terms(text_col).alias("_toks"),
     ).withColumn("doc_len", F.size("_toks").cast("long"))
     if not positions:
         return (
@@ -202,7 +201,6 @@ def index_stats(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     group_col: str | None = None,
 ) -> DataFrame:
     """One-row (n_docs, total_len, avgdl) corpus statistics for BM25's
@@ -218,7 +216,7 @@ def index_stats(
     gb = [group_col] if group_col else []
     sized = df.select(
         *gb,
-        F.size(search_terms(text_col, lowercase)).cast("long").alias("_dl"),
+        F.size(search_terms(text_col)).cast("long").alias("_dl"),
     )
     grouped = sized.groupBy(*gb) if gb else sized
     return grouped.agg(
@@ -254,10 +252,8 @@ def bm25_topk(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    lowercase: bool = True,
     dfreq: DataFrame | None = None,
     max_df_frac: float | None = None,
-    pin: bool = True,
     group_col: str | None = None,
     term_boosts: DataFrame | None = None,
     filter_ids: DataFrame | None = None,
@@ -298,17 +294,15 @@ def bm25_topk(
     scan still reads the hot term's postings once to count them.
     Default None (off) — the parity/oracle configuration.
 
-    ``pin``: on the convenience (``dfreq=None``) path the matched
-    postings feed TWO branches (df derivation + scoring), so they are
-    pinned with a LAZY ``localCheckpoint(eager=False)`` — no job fires
-    at query-construction time; the pin materializes with the first
+    On the convenience (``dfreq=None``) path the matched postings feed
+    TWO branches (df derivation + scoring), so they are pinned with a
+    LAZY ``localCheckpoint(eager=False)`` — no job fires at
+    query-construction time; the pin materializes with the first
     action and is reused by both branches. Local checkpoints store
     unreplicated executor-local blocks: lose an executor and the
     truncated lineage cannot recompute them, failing downstream
     actions (the simhash-precedent fragility). On a cluster where
-    that matters, either pass ``dfreq`` (no pin exists on that path)
-    or ``pin=False`` to keep full lineage and accept recomputing the
-    matched branch per consumer.
+    that matters, pass ``dfreq`` — no pin exists on that path.
 
     ``group_col``: per-corpus search over a grouped index (built with
     :func:`inverted_index`'s ``group_col``; ``stats`` and ``dfreq``
@@ -358,7 +352,7 @@ def bm25_topk(
         queries.select(
             F.col(query_id_col).alias("query_id"),
             *gb,
-            F.explode(search_terms(query_col, lowercase)).alias("term"),
+            F.explode(search_terms(query_col)).alias("term"),
         )
         .distinct()
     )
@@ -388,9 +382,8 @@ def bm25_topk(
         # not recomputed (the simhash localCheckpoint precedent); the
         # pinned table is query-term postings only, not the corpus.
         # LAZY (eager=False): no job at construction time; see the
-        # docstring for the executor-loss trade and the pin= hatch
-        if pin:
-            matched = matched.localCheckpoint(eager=False)
+        # docstring for the executor-loss trade
+        matched = matched.localCheckpoint(eager=False)
         dfreq = matched.groupBy(*jk).agg(F.count(F.lit(1)).alias("df"))
         if max_df_frac is not None:
             dfreq = _df_valve(dfreq)
@@ -457,7 +450,6 @@ def advance_index(
     batch: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     replace_ids: bool = False,
     group_col: str | None = None,
     fields: dict[str, str] | list[str] | None = None,
@@ -526,11 +518,11 @@ def advance_index(
     gb = [group_col] if group_col else []
     if fielded:
         new_post = fielded_index(
-            batch, fields, id_col, lowercase, group_col=group_col
+            batch, fields, id_col, group_col=group_col
         )
     else:
         new_post = inverted_index(
-            batch, text_col, id_col, lowercase, positions=pos,
+            batch, text_col, id_col, positions=pos,
             group_col=group_col,
         )
     if replace_ids:
@@ -598,11 +590,9 @@ def boolean_topk(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    lowercase: bool = True,
     dfreq: DataFrame | None = None,
     max_df_frac: float | None = None,
     min_should_match: int = 0,
-    pin: bool = True,
     group_col: str | None = None,
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
@@ -648,11 +638,10 @@ def boolean_topk(
     degrades to must-only matching instead of silently matching
     nothing.
 
-    ``pin``: the matched postings feed the scoring AND banned-pairs
-    branches on every path (plus the df derivation when
-    ``dfreq=None``), so they are pinned with a LAZY
-    ``localCheckpoint(eager=False)`` on both — same trade and same
-    escape hatch as :func:`bm25_topk`.
+    The matched postings feed the scoring AND banned-pairs branches on
+    every path (plus the df derivation when ``dfreq=None``), so they
+    are pinned with a LAZY ``localCheckpoint(eager=False)`` on both —
+    the same executor-loss trade as :func:`bm25_topk`'s pin.
     Exclusion is a left-anti join on the (query, doc) pairs
     any surviving must_not term hits. Deterministic: decimal(28,7)
     score sums, (score desc, doc asc) ranks. ``group_col``: the
@@ -676,7 +665,7 @@ def boolean_topk(
         return queries.select(
             F.col(query_id_col).alias("query_id"),
             *gb,
-            F.explode(search_terms(col, lowercase)).alias("term"),
+            F.explode(search_terms(col)).alias("term"),
             F.lit(tag).alias("_role"),
         )
 
@@ -742,8 +731,7 @@ def boolean_topk(
     # the matched branch fans into scoring AND the banned-pairs
     # distinct on BOTH df paths (plus the df derivation on the
     # on-the-fly one) — pin it so the postings scan runs once
-    if pin:
-        matched = matched.localCheckpoint(eager=False)
+    matched = matched.localCheckpoint(eager=False)
     if dfreq is None:
         dfreq = matched.groupBy(*jk).agg(F.count(F.lit(1)).alias("df"))
         if max_df_frac is not None:
@@ -873,7 +861,6 @@ def phrase_topk(
     query_col: str = "query",
     query_id_col: str = "query_id",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     group_col: str | None = None,
     stats: DataFrame | None = None,
     dfreq: DataFrame | None = None,
@@ -940,9 +927,7 @@ def phrase_topk(
     qp = phrases.select(
         F.col(query_id_col).alias("query_id"),
         *gb,
-        F.posexplode(search_terms(query_col, lowercase)).alias(
-            "_off", "term"
-        ),
+        F.posexplode(search_terms(query_col)).alias("_off", "term"),
     )
     if group_col:
         qp = qp.withColumn("_gk", _gkey(group_col)).drop(group_col)
@@ -1006,7 +991,6 @@ def fielded_index(
     df: DataFrame,
     fields: dict[str, str] | list[str],
     id_col: str = "doc_id",
-    lowercase: bool = True,
     group_col: str | None = None,
 ) -> DataFrame:
     """(field, term, ``id_col``, tf, field_len) per-field postings —
@@ -1034,7 +1018,7 @@ def fielded_index(
         *[
             F.struct(
                 F.lit(name).alias("field"),
-                search_terms(col, lowercase).alias("toks"),
+                search_terms(col).alias("toks"),
             )
             for name, col in fmap.items()
         ]
@@ -1064,7 +1048,6 @@ def field_stats(
     df: DataFrame,
     fields: dict[str, str] | list[str],
     id_col: str = "doc_id",
-    lowercase: bool = True,
     group_col: str | None = None,
 ) -> DataFrame:
     """Per-field (field, n_docs, total_len, avgdl) — BM25F's per-field
@@ -1083,7 +1066,7 @@ def field_stats(
         *[
             F.struct(
                 F.lit(name).alias("field"),
-                F.size(search_terms(col, lowercase))
+                F.size(search_terms(col))
                 .cast("long")
                 .alias("flen"),
             )
@@ -1305,10 +1288,8 @@ def bm25f_topk(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float | dict[str, float] = 0.75,
-    lowercase: bool = True,
     dfreq: DataFrame | None = None,
     max_df_frac: float | None = None,
-    pin: bool = True,
     group_col: str | None = None,
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
@@ -1332,9 +1313,9 @@ def bm25f_topk(
     the searched fields (postings rows of unlisted fields are filtered
     at the scan); ``b`` is one value or a per-field dict (per-field
     length normalization is the second BM25F knob). ``dfreq`` /
-    ``max_df_frac`` / ``pin`` behave exactly as in :func:`bm25_topk`
-    (same valve, same lazy pin on the convenience path, same
-    escape hatch) — and idf's df is DOC-grain over ALL indexed fields
+    ``max_df_frac`` behave exactly as in :func:`bm25_topk` (same
+    valve, same lazy pin on the convenience path, same executor-loss
+    trade) — and idf's df is DOC-grain over ALL indexed fields
     on both paths (the on-the-fly derivation runs before the weights
     filter), so a weights subset reweights scoring without changing
     df.
@@ -1413,7 +1394,7 @@ def bm25f_topk(
         queries.select(
             F.col(query_id_col).alias("query_id"),
             *gb,
-            F.explode(search_terms(query_col, lowercase)).alias("term"),
+            F.explode(search_terms(query_col)).alias("term"),
         )
         .distinct()
     )
@@ -1438,8 +1419,7 @@ def bm25f_topk(
         postings = postings.withColumn("_gk", _gkey(group_col))
     all_matched = postings.join(F.broadcast(qterms), jk)
     if dfreq is None:
-        if pin:
-            all_matched = all_matched.localCheckpoint(eager=False)
+        all_matched = all_matched.localCheckpoint(eager=False)
         dfreq = fielded_term_stats(
             all_matched, id_col, group_col=("_gk" if group_col else None)
         )
@@ -1859,7 +1839,6 @@ def prf_expand(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    lowercase: bool = True,
     dfreq: DataFrame | None = None,
     min_df: int = 1,
     max_df_frac: float | None = None,
@@ -1918,7 +1897,7 @@ def prf_expand(
     ranked = bm25_topk(
         postings, queries, stats, k=int(fb_docs),
         query_col=query_col, query_id_col=query_id_col, id_col=id_col,
-        k1=k1, b=b, lowercase=lowercase, dfreq=dfreq,
+        k1=k1, b=b, dfreq=dfreq,
         max_df_frac=max_df_frac, filter_ids=filter_ids,
         group_col=group_col,
     )
@@ -1967,7 +1946,7 @@ def prf_expand(
     # drop the query's own terms — expansion adds NEW vocabulary
     own = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.explode(search_terms(query_col, lowercase)).alias("term"),
+        F.explode(search_terms(query_col)).alias("term"),
     ).distinct()
     fresh = scored.join(F.broadcast(own), ["query_id", "term"], "left_anti")
     w = Window.partitionBy("query_id").orderBy(
@@ -2227,7 +2206,6 @@ def near_topk(
     query_col: str = "query",
     query_id_col: str = "query_id",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     ordered: bool = False,
     group_col: str | None = None,
     stats: DataFrame | None = None,
@@ -2298,9 +2276,7 @@ def near_topk(
         qp = queries.select(
             F.col(query_id_col).alias("query_id"),
             *gb,
-            F.posexplode(search_terms(query_col, lowercase)).alias(
-                "_off", "term"
-            ),
+            F.posexplode(search_terms(query_col)).alias("_off", "term"),
         )
         tag = F.transform(
             "positions",
@@ -2314,9 +2290,7 @@ def near_topk(
             queries.select(
                 F.col(query_id_col).alias("query_id"),
                 *gb,
-                F.explode(
-                    search_terms(query_col, lowercase)
-                ).alias("term"),
+                F.explode(search_terms(query_col)).alias("term"),
             )
             .distinct()
             .withColumn(
@@ -2455,7 +2429,6 @@ def hit_windows(
     query_col: str = "query",
     query_id_col: str = "query_id",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     group_col: str | None = None,
 ) -> DataFrame:
     """Best-window offsets for SCORE-RANKED hits — the highlight leg
@@ -2491,7 +2464,7 @@ def hit_windows(
     qt = queries.select(
         F.col(query_id_col).alias("query_id"),
         *gb,
-        F.explode(search_terms(query_col, lowercase)).alias("term"),
+        F.explode(search_terms(query_col)).alias("term"),
     ).distinct()
     hk = hits.select(
         F.col(query_id_col).alias("query_id"), *gb, F.col(id_col)
@@ -2569,7 +2542,6 @@ def snippets(
     context: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     group_col: str | None = None,
 ) -> DataFrame:
     """Token-window snippets for retrieval hits — the display leg:
@@ -2596,7 +2568,7 @@ def snippets(
     toks = docs.select(
         F.col(id_col),
         *gb,
-        search_terms(text_col, lowercase).alias("_toks"),
+        search_terms(text_col).alias("_toks"),
     )
     h = hits
     if group_col:

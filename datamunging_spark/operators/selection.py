@@ -332,7 +332,6 @@ def dsir_scores(
     id_col: str = "doc_id",
     hash_chars: int = 4,
     bigrams: bool = True,
-    broadcast_ratios: bool = True,
     group_col: str | None = None,
     normalize: bool = False,
 ) -> DataFrame:
@@ -353,7 +352,8 @@ def dsir_scores(
     rides the output for per-group resampling, and docs whose group
     has no ratio rows (absent from the target) are dropped — see
     :func:`dsir_logratios`. Plan: explode → broadcast inner join
-    (every bucket exists in the table) → one hash aggregate; ratios
+    (every bucket exists in the table; ``hash_chars >= 6`` falls back
+    to a shuffle join with a warning) → one hash aggregate; ratios
     summed as decimal(28,7) so the score is reduction-order-free."""
     _check_meta(logratios, hash_chars, group_col, "dsir_scores")
     gb = [group_col] if group_col else []
@@ -364,22 +364,19 @@ def dsir_scores(
     ratios = _renamed_right(
         logratios, gb, [F.col("logratio").cast("decimal(28,7)").alias("_lr")]
     )
-    if broadcast_ratios and hash_chars >= 6:
+    if hash_chars >= 6:
         # 16^6 = 16.7M rows (~0.5+ GB broadcast) even ungrouped — the
         # bucket width alone breaks the broadcast regardless of group
-        # count, so auto-fall back to a shuffle join (r11 ADVICE)
+        # count, so fall back to a shuffle join (r11 ADVICE)
         import warnings
 
         warnings.warn(
             f"dsir_scores: ratio table has 16^{hash_chars} buckets — "
-            "too wide to broadcast; falling back to a shuffle join "
-            "(pass broadcast_ratios=False to silence)",
+            "too wide to broadcast; falling back to a shuffle join",
             stacklevel=2,
         )
-        broadcast_ratios = False
-    if broadcast_ratios:
-        # with group_col the table is groups × 16^hash_chars rows —
-        # pass broadcast_ratios=False past ~100 groups at hash_chars=4
+    else:
+        # with group_col the table is groups × 16^hash_chars rows
         ratios = F.broadcast(ratios)
     # NULL-safe: the NULL group scores against ITS OWN ratio rows
     return (

@@ -182,7 +182,6 @@ def shared_span_pairs(
     max_fp_df: int | None = 64,
     max_anchors_per_pair: int = 256,
     max_pairs_per_doc: int | None = None,
-    materialize: bool = True,
     valve: str = "exact",
     valve_k: int = 65536,
     _precomputed_fps: DataFrame | None = None,
@@ -217,13 +216,11 @@ def shared_span_pairs(
     otherwise replicate its text 10^5-fold. Pairs beyond the cap go
     undetected for that doc — the same explicit trade as ``max_fp_df``.
 
-    ``materialize`` (default on) localCheckpoints the fingerprint table:
-    it feeds THREE plan branches (the valve groupBy, and both sides of
-    the self-join), which would otherwise re-run the winnowing
-    ``mapInPandas`` pass per branch — the materialize-once discipline
-    SCALE.md documents (measured ~25% off the candidate stage at sf0.1;
-    on a real cluster prefer ``checkpoint()`` for executor-loss
-    recovery).
+    The fingerprint table is localCheckpointed: it feeds THREE plan
+    branches (the valve groupBy, and both sides of the self-join), which
+    would otherwise re-run the winnowing ``mapInPandas`` pass per branch
+    — the materialize-once discipline SCALE.md documents (measured ~25%
+    off the candidate stage at sf0.1).
 
     Plan shape: fingerprint scan → hot-fingerprint valve (a gram
     fingerprint present in more than ``max_fp_df`` documents is
@@ -250,9 +247,7 @@ def shared_span_pairs(
         fps = winnow_fingerprints(
             df, text_col=text_col, id_col=id_col,
             min_span=min_span, gram=gram,
-        )
-        if materialize:
-            fps = fps.localCheckpoint()
+        ).localCheckpoint()
     if max_fp_df is not None:
         if valve == "sketch":
             from datamunging_spark.operators.sketch import hot_keys_sketch
@@ -564,7 +559,6 @@ def span_dedup(
     max_anchors_per_pair: int = 256,
     max_pairs_per_doc: int | None = None,
     keep: str = "first",
-    materialize: bool = True,
     valve: str = "exact",
     valve_k: int = 65536,
     _precomputed_fps: DataFrame | None = None,
@@ -593,7 +587,6 @@ def span_dedup(
         max_fp_df=max_fp_df,
         max_anchors_per_pair=max_anchors_per_pair,
         max_pairs_per_doc=max_pairs_per_doc,
-        materialize=materialize,
         valve=valve,
         valve_k=valve_k,
         _precomputed_fps=_precomputed_fps,
@@ -616,7 +609,6 @@ def boilerplate_templates(
     max_hot_fps: int = 4096,
     max_templates: int = 256,
     max_anchors_per_pair: int = 256,
-    materialize: bool = True,
     _precomputed_fps: DataFrame | None = None,
 ) -> DataFrame:
     """Mine UNIVERSAL boilerplate templates — verbatim strings of length
@@ -680,7 +672,7 @@ def boilerplate_templates(
         fps = fps.join(
             df.select(F.col(id_col), F.col(group_col)), id_col
         )
-    if materialize and _precomputed_fps is None:
+    if _precomputed_fps is None:
         # feeds the df-count groupBy AND the sample join
         fps = fps.localCheckpoint()
 
@@ -1180,7 +1172,6 @@ def incremental_shared_spans(
     max_fp_df: int | None = 64,
     max_anchors_per_pair: int = 256,
     max_pairs_per_doc: int | None = None,
-    materialize: bool = True,
     _precomputed_batch_fps: DataFrame | None = None,
 ) -> DataFrame:
     """Spans shared between a NEW ingest batch and the historical corpus
@@ -1208,20 +1199,18 @@ def incremental_shared_spans(
             min_span=min_span, gram=gram,
         )
     )
-    if materialize and _precomputed_batch_fps is None:
+    if _precomputed_batch_fps is None:
         batch_fps = batch_fps.localCheckpoint()
     if max_fp_df is not None:
         # joint document frequency, restricted to fps the BATCH carries:
         # semi-join the snapshot down to candidate fps first, then count
         # across both sides — the count input is batch-bounded
         bf = batch_fps.select("fp").distinct()
-        cand_hist = hist_fps.join(bf, "fp")
-        if materialize:
-            # cand_hist feeds the joint count AND the join side; without
-            # this the history-snapshot probe (the dominant cost) runs
-            # once per branch — same materialize-once discipline as the
-            # self-join path's fps table
-            cand_hist = cand_hist.localCheckpoint()
+        # cand_hist feeds the joint count AND the join side; without
+        # this the history-snapshot probe (the dominant cost) runs once
+        # per branch — same materialize-once discipline as the
+        # self-join path's fps table
+        cand_hist = hist_fps.join(bf, "fp").localCheckpoint()
         joint = cand_hist.select("fp", id_col).unionByName(
             batch_fps.select("fp", id_col)
         )
@@ -1231,8 +1220,7 @@ def incremental_shared_spans(
             .filter(F.col("_df") <= max_fp_df)
             .select("fp")
         )
-        if materialize:
-            keep = keep.localCheckpoint()  # feeds both sides, fp-list slim
+        keep = keep.localCheckpoint()  # feeds both sides, fp-list slim
         hist_side = cand_hist.join(keep, "fp")
         batch_side = batch_fps.join(keep, "fp")
     else:
@@ -1299,7 +1287,6 @@ def incremental_span_dedup(
     max_anchors_per_pair: int = 256,
     max_pairs_per_doc: int | None = None,
     within_batch: bool = True,
-    materialize: bool = True,
     _return_fps: bool = False,
     _precomputed_batch_fps: DataFrame | None = None,
 ):
@@ -1328,7 +1315,6 @@ def incremental_span_dedup(
         max_fp_df=max_fp_df,
         max_anchors_per_pair=max_anchors_per_pair,
         max_pairs_per_doc=max_pairs_per_doc,
-        materialize=materialize,
     )
     if _precomputed_batch_fps is not None:
         # same contract as incremental_shared_spans'/_shared_span_pairs'
@@ -1339,13 +1325,11 @@ def incremental_span_dedup(
         # build, guide §2.6)
         batch_fps = _precomputed_batch_fps
     else:
+        # feeds the history join AND the within-batch reuse anti-join
         batch_fps = winnow_fingerprints(
             batch, text_col=text_col, id_col=id_col,
             min_span=min_span, gram=gram,
-        )
-        if materialize:
-            # feeds the history join AND the within-batch reuse anti-join
-            batch_fps = batch_fps.localCheckpoint()
+        ).localCheckpoint()
     spans = incremental_shared_spans(
         batch, hist_fps, hist_texts,
         text_col=text_col, id_col=id_col,
@@ -1355,7 +1339,7 @@ def incremental_span_dedup(
     cleaned = remove_shared_spans(
         batch, spans, text_col=text_col, id_col=id_col, keep="first"
     )
-    if materialize and (within_batch or _return_fps):
+    if within_batch or _return_fps:
         # the history-cleaned batch feeds up to FIVE plan branches (the
         # cut-docs re-winnow semi-join, both text joins of the
         # within-batch pair plan, and both sides of the final removal) —
@@ -1383,10 +1367,9 @@ def incremental_span_dedup(
     cleaned_fps = _refresh(batch_fps, spans, cleaned)
     if not within_batch:
         return (cleaned, cleaned_fps) if _return_fps else cleaned
-    if materialize:
-        # feeds three branches of the within-batch pair plan (valve
-        # groupBy + both join sides) — same discipline as a fresh winnow
-        cleaned_fps = cleaned_fps.localCheckpoint()
+    # feeds three branches of the within-batch pair plan (valve
+    # groupBy + both join sides) — same discipline as a fresh winnow
+    cleaned_fps = cleaned_fps.localCheckpoint()
     final, within_spans = span_dedup(
         cleaned, text_col=text_col, id_col=id_col,
         min_span=min_span, gram=gram,

@@ -938,7 +938,6 @@ def lm_quality_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     oov_logprob: float = -20.0,
-    broadcast_lm: bool = True,
     group_col: str | None = None,
 ) -> DataFrame:
     """Score each document's mean per-token unigram log-probability under a
@@ -951,12 +950,11 @@ def lm_quality_score(
     Output: (id, n_tokens, n_oov, lm_score) for every doc with ≥1 token;
     ``lm_score`` = mean token logprob, OOV tokens scored ``oov_logprob``.
 
-    Plan: explode → LEFT join the vocabulary-sized model (broadcast by
-    default — at 100 TB the model is MBs; set ``broadcast_lm=False`` to
-    let AQE decide for huge vocabularies) → one hash aggregate back to doc
-    grain. The per-token logprobs sum as ``decimal(28,7)`` — exact, so
-    the aggregate is reduction-order-independent and oracle-reproducible
-    (the same discipline as pricing_summary's decimal sums).
+    Plan: explode → LEFT join the vocabulary-sized model (broadcast — at
+    100 TB the model is MBs) → one hash aggregate back to doc grain. The
+    per-token logprobs sum as ``decimal(28,7)`` — exact, so the aggregate
+    is reduction-order-independent and oracle-reproducible (the same
+    discipline as pricing_summary's decimal sums).
     """
     from datamunging_spark.functions import normalize_text
 
@@ -980,13 +978,13 @@ def lm_quality_score(
             )
         ).alias("token"),
     )
-    model = lm.select(
-        *[F.col(g).alias(f"_mg_{g}") for g in gb],
-        F.col("token").alias("_mtok"),
-        F.col("logprob").cast("decimal(28,7)").alias("_lp"),
+    model = F.broadcast(
+        lm.select(
+            *[F.col(g).alias(f"_mg_{g}") for g in gb],
+            F.col("token").alias("_mtok"),
+            F.col("logprob").cast("decimal(28,7)").alias("_lp"),
+        )
     )
-    if broadcast_lm:
-        model = F.broadcast(model)
     oov = F.lit(oov_logprob).cast("decimal(28,7)")
     # per-group model: a doc's tokens only match ITS group's vocabulary;
     # group keys compare NULL-SAFELY so the unidentified-language slice

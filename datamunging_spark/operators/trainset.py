@@ -572,7 +572,6 @@ def concat_packed_sequences(
     id_col: str = "doc_id",
     max_len: int = 2048,
     num_groups: int | None = None,
-    materialize: bool = True,
     split_oversize: bool = False,
 ) -> DataFrame:
     """Materialize PACKED TRAINING SEQUENCES: run :func:`pack_sequences`
@@ -614,14 +613,13 @@ def concat_packed_sequences(
     path). The trailing partial chunk packs with other docs' slices
     like any small doc.
 
-    ``materialize`` (default on) ``localCheckpoint``s the slim
-    ``(id, ids, size)`` projection BEFORE it fans out to the packing
-    pass and the member join — without it the upstream tokenizer (the
-    dominant cost when ``ids_col`` is a
-    :func:`~datamunging_spark.operators.bpe.bpe_tokenizer` column)
-    would run twice, once per branch. Same pinning trade as
-    :func:`take_token_budget`: executor-local storage, no lineage
-    recovery for the pinned slice.
+    The slim ``(id, ids, size)`` projection is ``localCheckpoint``-ed
+    BEFORE it fans out to the packing pass and the member join —
+    without it the upstream tokenizer (the dominant cost when
+    ``ids_col`` is a :func:`~datamunging_spark.operators.bpe.
+    bpe_tokenizer` column) would run twice, once per branch. Same
+    pinning trade as :func:`take_token_budget`: executor-local storage,
+    no lineage recovery for the pinned slice.
 
     Returns ``(bin_id, bin_tokens, n_docs, truncated, token_ids)``
     where ``token_ids`` is the packed ``array<int>`` window. Pair with
@@ -684,9 +682,9 @@ def concat_packed_sequences(
                 )
             ).alias("_c", ids_col),
         ).select(chunk_key.alias(id_col), ids_col)
-    counted = counted.withColumn("_n_tok", F.size(F.col(ids_col)))
-    if materialize:
-        counted = counted.localCheckpoint()
+    counted = counted.withColumn(
+        "_n_tok", F.size(F.col(ids_col))
+    ).localCheckpoint()
     assign = pack_sequences(
         counted,
         id_col=id_col,

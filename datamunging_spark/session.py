@@ -14,10 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[32] test harness; on a real cluster these are
-# overridden by spark-submit conf. shuffle.partitions is intentionally NOT a
-# hard-coded large number: AQE coalesces post-shuffle partitions at runtime,
-# so the static value is just an upper bound for small-data runs.
+# Static defaults; on a real cluster these are overridden by spark-submit
+# conf. Environment-derived settings (core count, driver memory) are read
+# in _session_conf on every get_spark call, not at import.
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -57,8 +56,6 @@ _DEFAULTS: dict[str, str] = {
     # Broadcast threshold: generous for dimension tables (region/nation/
     # supplier/part stay broadcastable far beyond sf1).
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # Read parallelism: default 128 MB splits — right for 100 TB parquet;
     # harmless locally.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
@@ -85,14 +82,26 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+def _session_conf(**conf: str) -> tuple[str, dict[str, str]]:
+    """(master, conf) that :func:`get_spark` applies, reading the
+    environment at call time. shuffle.partitions follows the core count
+    rather than a large constant: AQE coalesces post-shuffle partitions at
+    runtime, so the static value is just an upper bound."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    merged = dict(_DEFAULTS)
+    merged["spark.sql.shuffle.partitions"] = cpus
+    merged["spark.driver.memory"] = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", "8g"
+    )
+    merged.update({k: str(v) for k, v in conf.items()})
+    return master, merged
+
+
 def get_spark(app_name: str = "datamunging_spark", **conf: str) -> SparkSession:
     """Build (or fetch) the session with engine defaults; ``conf`` overrides."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name).master(
-        os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    )
-    merged = dict(_DEFAULTS)
-    merged.update({k: str(v) for k, v in conf.items()})
+    master, merged = _session_conf(**conf)
+    builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

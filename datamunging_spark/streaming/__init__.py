@@ -1246,7 +1246,6 @@ def streaming_index_ingest(
     table_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     checkpoint_path: str | None = None,
     keep_last: int = 2,
     version_col: str | None = None,
@@ -1453,7 +1452,7 @@ def streaming_index_ingest(
         next_v = (latest_table_version(bspark, table_path) or 0) + 1
         batch_stats = stats_from_postings(
             inverted_index(
-                batch, text_col, id_col, lowercase, group_col=group_col
+                batch, text_col, id_col, group_col=group_col
             ),
             id_col,
             group_col=group_col,
@@ -1607,7 +1606,7 @@ def streaming_index_ingest(
         if write_base:
             folded = (
                 inverted_index(
-                    batch, text_col, id_col, lowercase, positions=pos,
+                    batch, text_col, id_col, positions=pos,
                     group_col=group_col,
                 )
                 if state is None
@@ -1616,7 +1615,6 @@ def streaming_index_ingest(
                     batch,
                     text_col=text_col,
                     id_col=id_col,
-                    lowercase=lowercase,
                     replace_ids=True,
                     group_col=group_col,
                 )
@@ -1624,7 +1622,7 @@ def streaming_index_ingest(
             write_table_version(folded, table_path, next_v)
         else:
             inverted_index(
-                batch, text_col, id_col, lowercase, positions=pos,
+                batch, text_col, id_col, positions=pos,
                 group_col=group_col,
             ).write.mode("overwrite").parquet(f"{vpath}/postings_delta")
             batch.select(*gb, F.col(id_col)).distinct().write.mode(

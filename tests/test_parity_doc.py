@@ -107,7 +107,7 @@ def test_bench_normalized_regression_list_is_deterministic():
     genuine regression is flagged without moving the factor much."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from gen_baseline_table import machine_factor, normalized_deltas
 
     prev = {"queries": {f"q{i}": 1.0 + i * 0.1 for i in range(20)}}

@@ -759,11 +759,6 @@ def test_boolean_topk_valve_and_dfreq_paths(spark):
     assert sorted((r.query_id, r.doc_id) for r in full.collect()) == [
         (0, 1)
     ]
-    # pin=False (no localCheckpoint) is result-identical
-    unpinned = boolean_topk(post, q, stats, k=5, pin=False)
-    assert sorted(
-        (r.query_id, r.doc_id) for r in unpinned.collect()
-    ) == [(0, 1)]
 
 
 def test_boolean_topk_min_should_match(spark):
@@ -794,21 +789,6 @@ def test_boolean_topk_min_should_match(spark):
     )
     both = boolean_topk(post, qm, stats, k=5, min_should_match=2)
     assert [r.doc_id for r in both.collect()] == [1]
-
-
-def test_bm25_pin_flag_result_identical(spark):
-    docs = _docs(spark)
-    post, stats = inverted_index(docs), index_stats(docs)
-    q = spark.createDataFrame([Row(query_id=0, query="zebra fast")])
-    a = sorted(
-        (r.query_id, r.doc_id, r.rank, r.bm25)
-        for r in bm25_topk(post, q, stats, k=4).collect()
-    )
-    b = sorted(
-        (r.query_id, r.doc_id, r.rank, r.bm25)
-        for r in bm25_topk(post, q, stats, k=4, pin=False).collect()
-    )
-    assert a == b and a
 
 
 def test_advance_index_empty_text_update_is_delete(spark):

@@ -4,7 +4,9 @@ co-located joins, partition pruning, and broadcast selection. These pin the
 when answers stay correct."""
 
 import io
+import re
 from contextlib import redirect_stdout
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -353,12 +355,18 @@ def test_span_dedup_candidates_are_equi_join_not_cartesian(spark, tables):
     """Span-dedup candidate generation must be a fingerprint equi-join
     (the winnowing design point) — never CartesianProduct /
     BroadcastNestedLoopJoin, which would be the all-pairs suffix-array
-    comparison the operator exists to avoid."""
+    comparison the operator exists to avoid. The fingerprint table is
+    checkpointed, but its self-join stays in the returned lazy plan, so
+    the equi-join on ``fp`` must be visible there."""
     from datamunging_spark.operators.spandedup import shared_span_pairs
 
     docs = tables["documents"].select("doc_id", "text")
-    plan = _plan(
-        shared_span_pairs(docs, min_span=50, gram=24, materialize=False)
+    plan = _plan(shared_span_pairs(docs, min_span=50, gram=24))
+    # the doc_a < doc_b self-join itself, keyed on fp on both sides
+    assert re.search(
+        r"Left keys \[1\]: \[fp#\d+L?\]\nRight keys \[1\]: \[fp#\d+L?\]\n"
+        r"Join type: Inner\nJoin condition: \(doc_a#\d+L? < doc_b#\d+L?\)",
+        plan,
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -370,7 +378,7 @@ def test_checkpoint_stage_audit_captures_composites(spark, tables):
     0-shuffle final frame — drift assert for tools/audit_plans.py."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from audit_plans import _CheckpointAudit
 
     from datamunging_spark.operators.dedup import ingest_batch
